@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 from .. import analysis
 from ..codec import encode_varint_sizes
 from ..extraction import EXTRACT_SCHEMA, extract_text_map_in_pandas
-from .storage import POSTINGS_SCHEMA, IndexStorage
+from .storage import (POSTINGS_SCHEMA, IndexStorage, write_term_frame,
+                      write_term_table)
 
 # ---------------------------------------------------------------- expressions
 
@@ -125,6 +126,36 @@ def tokens_from_text(df: DataFrame, url_col: str = "url", text_col: str = "text"
         )
         .withColumn("dl", F.size("tokens"))
     )
+
+
+def keep_one_per_doc(toks: DataFrame) -> DataFrame:
+    """Duplicate-url survivor over tokens_from_text rows: the max
+    content hash per doc_id (dropDuplicates would keep a partition-
+    order-dependent row), so re-runs build bit-identical indexes even
+    when one url arrives with two texts — matching the merge path's
+    defined upsert semantics."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("doc_id").orderBy(
+        F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
+    return (toks.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1).drop("_rn"))
+
+
+def sidecar_tokens(docs_df: DataFrame, *, text_is_extracted: bool,
+                   extract_mode: str) -> DataFrame:
+    """tokens_from_text rows for a sidecar build (positions, vocab) over
+    the corpus build_index saw, with build_index's duplicate-url
+    survivor. Duplicates are found by count vs distinct doc_id on the
+    raw input (no extraction), so a duplicated doc is caught even when
+    a missing doc keeps the row count equal to the manifest's n_docs."""
+    st = docs_df.agg(F.count(F.lit(1)).alias("n"),
+                     F.countDistinct(doc_id_expr("url")).alias("u")).collect()[0]
+    if not text_is_extracted:
+        docs_df = (extract(docs_df) if extract_mode == "html"
+                   else extract_any(docs_df))
+    toks = tokens_from_text(docs_df)
+    return toks if int(st["n"]) == int(st["u"]) else keep_one_per_doc(toks)
 
 
 # ---------------------------------------------------------------- block build
@@ -503,7 +534,6 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
 
             import pyarrow as pa
             import pyarrow.dataset as pads
-            import pyarrow.parquet as pq
 
             for pdf in pdfs:
                 for b in pdf["bucket"].tolist():
@@ -522,13 +552,13 @@ def build_postings_bucketed(spark: SparkSession, tf_df: DataFrame,
                     del tbl
                     out = os.path.join(p_dir, f"bucket={b}")
                     os.makedirs(out, exist_ok=True)
-                    pq.write_table(
+                    write_term_table(
                         pa.Table.from_batches([rb]).drop_columns(["bucket"]),
                         os.path.join(out, "part-00000.parquet"))
                     if ts_dir is not None:
                         tsd = os.path.join(ts_dir, f"bucket={b}")
                         os.makedirs(tsd, exist_ok=True)
-                        pq.write_table(
+                        write_term_table(
                             pa.table({"term_id": t_ids,
                                       "df": t_dfs.astype("int64")}),
                             os.path.join(tsd, "part-00000.parquet"))
@@ -650,17 +680,7 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     # ONLY when a duplicate is actually present.
     st = _stats_agg(toks)
     if int(st["n_docs"]) != int(st["n_uniq"]):
-        # deterministic survivor (dropDuplicates keeps a partition-order-
-        # dependent row): max content hash per doc_id, so re-runs build
-        # bit-identical indexes even when one url arrives with two texts —
-        # matching the merge path's defined upsert semantics
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("doc_id").orderBy(
-            F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
-        deduped = (toks.withColumn("_rn", F.row_number().over(w))
-                   .where(F.col("_rn") == 1).drop("_rn")
-                   .persist(StorageLevel.MEMORY_AND_DISK))
+        deduped = keep_one_per_doc(toks).persist(StorageLevel.MEMORY_AND_DISK)
         toks.unpersist()
         toks = deduped
         st = _stats_agg(toks)
@@ -733,12 +753,10 @@ def build_index(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
             salt_df_threshold=salt_df_threshold, salt_count=salt_count,
             seg=seg,
         )
-        # blocks arrive pre-clustered by bucket and pre-sorted by
-        # term_id (build_postings shuffles ONCE on the output
-        # partitioning), so the partitionBy write emits exactly one
-        # file per bucket with sorted term_id row groups
-        blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-            postings_dir)
+        # blocks arrive pre-clustered by bucket (build_postings
+        # shuffles ONCE on the output partitioning), so the partitioned
+        # write emits exactly one term_id-sorted file per bucket
+        write_term_frame(blocks, postings_dir, dynamic=False)
         toks.unpersist()
         if not staging:
             write_term_stats_and_lineage(spark, store, phase="build",
@@ -776,12 +794,10 @@ def write_term_stats_and_lineage(spark: SparkSession, store: IndexStorage, *,
     try:
         # dynamic partition overwrite -> idempotent on merge resume
         # (re-running replaces exactly the touched bucket partitions)
-        (meta.groupBy("bucket", "term_id").agg(F.sum("n").alias("df"))
-         .repartition("bucket").sortWithinPartitions("term_id")
-         .select("term_id", "df", "bucket")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(store.term_stats_dir_for(epoch)))
+        write_term_frame(
+            meta.groupBy("bucket", "term_id").agg(F.sum("n").alias("df"))
+            .repartition("bucket").select("term_id", "df", "bucket"),
+            store.term_stats_dir_for(epoch))
         lineage_rows = (
             meta.groupBy("bucket")
             .agg(F.countDistinct("term_id").alias("n_terms"),

@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 
 from ..query.scoring import DECODED_SCHEMA, decode_postings_map_in_pandas
 from .build import build_index, build_postings, write_term_stats_and_lineage
-from .storage import POSTINGS_SCHEMA, IndexStorage
+from .storage import POSTINGS_SCHEMA, IndexStorage, write_term_frame
 
 
 class SimulatedMergeFailure(RuntimeError):
@@ -405,11 +405,7 @@ def merge_append(spark: SparkSession, index_dir: str,
         # dynamic partition overwrite: replaces exactly this wave's
         # bucket dirs, leaves hardlinked/committed buckets alone;
         # idempotent on resume re-runs
-        (out.repartition("bucket")
-         .sortWithinPartitions("term_id", "salt", "block_id")
-         .write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("bucket").parquet(new_dir))
+        write_term_frame(out.repartition("bucket"), new_dir)
         # buckets whose every group was rebuilt away (fully emptied) get
         # no partition dir from the writer; materialize them empty
         for b in wave:
@@ -536,11 +532,8 @@ def _fold_term_stats_delta(spark: SparkSession, store: IndexStorage,
               .select("bucket", "term_id", "df"))
     merged = (old_ts.unionByName(delta)
               .groupBy("bucket", "term_id").agg(F.sum("df").alias("df")))
-    (merged.repartition("bucket").sortWithinPartitions("term_id")
-     .select("term_id", "df", "bucket")
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("bucket").parquet(store.term_stats_dir_for(epoch)))
+    write_term_frame(merged.repartition("bucket").select("term_id", "df", "bucket"),
+                     store.term_stats_dir_for(epoch))
     store.append_lineage(spark, [
         {"bucket": b, "phase": "merge_stats", "epoch": epoch,
          "n_terms": -1, "n_blocks": -1, "n_postings": -1,
@@ -604,12 +597,8 @@ def compact_index(spark: SparkSession, index_dir: str, *,
                                     schema=DECODED_SCHEMA))
             if tomb is not None:
                 decoded = decoded.join(tomb, "doc_id", "left_anti")
-            (build_postings(decoded, **cfg)
-             .repartition("bucket")
-             .sortWithinPartitions("term_id", "salt", "block_id")
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(new_dir))
+            write_term_frame(build_postings(decoded, **cfg)
+                             .repartition("bucket"), new_dir)
         # fully-emptied buckets get no dir from the writer; materialize
         for b in wave:
             os.makedirs(os.path.join(new_dir, f"bucket={b}"), exist_ok=True)
@@ -718,12 +707,8 @@ def compact_tail(spark: SparkSession, index_dir: str, *,
                        .mapInPandas(decode_postings_map_in_pandas,
                                     schema=DECODED_SCHEMA))
             rebuilt = build_postings(decoded, seg=new_seg, **cfg)
-            (keep.unionByName(rebuilt)
-             .repartition("bucket")
-             .sortWithinPartitions("term_id", "salt", "block_id")
-             .write.mode("overwrite")
-             .option("partitionOverwriteMode", "dynamic")
-             .partitionBy("bucket").parquet(new_dir))
+            write_term_frame(keep.unionByName(rebuilt).repartition("bucket"),
+                             new_dir)
         for b in wave:
             os.makedirs(os.path.join(new_dir, f"bucket={b}"), exist_ok=True)
 

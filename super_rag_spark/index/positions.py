@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from .. import analysis
 from ..codec import decode_positions_block, encode_varint_sizes
-from .build import extract, extract_any, term_id_expr, tokens_from_text
+from .build import sidecar_tokens, term_id_expr
 from .storage import POSITIONS_SCHEMA, IndexStorage
 
 
@@ -170,31 +170,12 @@ def build_positions(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     block_size = int(manifest["block_size"])
     epoch = int(manifest["epoch"])
 
-    # duplicate-url guard, SAME deterministic survivor as build_index
-    # (build.py): without it a url ingested twice would merge BOTH
-    # copies' positions into one doc_id — phantom index-only phrase
-    # matches the postings (which kept one copy) can never produce.
-    # r6: the fast probe is a plain row count against the manifest's
-    # (deduped) n_docs — docs_df is contractually the corpus
-    # build_index saw, so a count mismatch is exactly "duplicates
-    # present" and costs a metadata count instead of a full
-    # extract+tokenize+countDistinct pass; only a mismatch pays the
-    # full guard + dedup.
-    n_in = docs_df.count()
-    if not text_is_extracted:
-        docs_df = (extract(docs_df) if extract_mode == "html"
-                   else extract_any(docs_df))
-    toks = tokens_from_text(docs_df)
-    if n_in != int(manifest["n_docs"]):
-        st = toks.agg(F.count(F.lit(1)).alias("n"),
-                      F.countDistinct("doc_id").alias("u")).collect()[0]
-        if int(st["n"]) != int(st["u"]):
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("doc_id").orderBy(
-                F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
-            toks = (toks.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1).drop("_rn"))
+    # duplicate-url guard, SAME deterministic survivor as build_index:
+    # without it a url ingested twice would merge BOTH copies'
+    # positions into one doc_id — phantom index-only phrase matches the
+    # postings (which kept one copy) can never produce.
+    toks = sidecar_tokens(docs_df, text_is_extracted=text_is_extracted,
+                          extract_mode=extract_mode)
     pos_rows = (
         toks.select("doc_id", F.posexplode("tokens").alias("pos", "term"))
         .select(term_id_expr("term").alias("term_id"), "doc_id",

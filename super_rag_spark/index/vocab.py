@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import extract, extract_any, term_id_expr, tokens_from_text
+from .build import sidecar_tokens, term_id_expr
 from .storage import IndexStorage
 
 VOCAB_SCHEMA = "variant string, term string, df long, bucket int"
@@ -112,24 +112,8 @@ def build_vocab(spark: SparkSession, docs_df: DataFrame, index_dir: str, *,
     n_buckets = int(manifest["n_buckets"])
     epoch = int(manifest["epoch"])
 
-    # duplicate-url fast probe: see build_positions (r6) — a row count
-    # against the manifest's deduped n_docs replaces the full
-    # extract+tokenize+countDistinct pass in the no-duplicates case
-    n_in = docs_df.count()
-    if not text_is_extracted:
-        docs_df = (extract(docs_df) if extract_mode == "html"
-                   else extract_any(docs_df))
-    toks = tokens_from_text(docs_df)
-    if n_in != int(manifest["n_docs"]):
-        st = toks.agg(F.count(F.lit(1)).alias("n"),
-                      F.countDistinct("doc_id").alias("u")).collect()[0]
-        if int(st["n"]) != int(st["u"]):
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("doc_id").orderBy(
-                F.md5(F.concat_ws(" ", "tokens")).desc(), F.desc("dl"))
-            toks = (toks.withColumn("_rn", F.row_number().over(w))
-                    .where(F.col("_rn") == 1).drop("_rn"))
+    toks = sidecar_tokens(docs_df, text_is_extracted=text_is_extracted,
+                          extract_mode=extract_mode)
     vocab = (
         toks.select("doc_id",
                     F.explode(F.array_distinct("tokens")).alias("term"))

@@ -25,8 +25,9 @@ from pyspark.sql import functions as F
 
 from ..analysis import term_id_for, tokenize
 from ..index.build import build_index, doc_id_expr
-from ..index.storage import IndexStorage, bucket_of_term_id
-from .scoring import score_query_batch, score_query_batch_wand
+from ..index.storage import (IndexStorage, bucket_of_term_id, dirs_for_terms,
+                             read_terms)
+from .scoring import lookup_term_dfs, score_query_batch, score_query_batch_wand
 from .wand import bruteforce_topk, vectorized_topk, wand_topk
 
 _TOPK_METHODS = {
@@ -99,10 +100,12 @@ class BM25Engine:
         self.store = IndexStorage(index_dir)
         self._manifest: dict | None = None
         self._manifest_mtime: int | None = None
-        # (epoch, bucket) -> pyarrow dataset; epoch-keyed so a long-lived
-        # engine spanning an out-of-band merge_append never reads a
-        # GC'd postings_e<N> directory through a stale dataset handle
-        self._ds_cache: dict[tuple[int, int], "ds.Dataset"] = {}
+        # (kind, epoch, ...) -> pyarrow dataset of a sidecar (positions,
+        # vocab); epoch-keyed so a long-lived engine spanning an
+        # out-of-band merge_append never reads a GC'd directory through
+        # a stale dataset handle. Postings and term_stats reads hold no
+        # handles (storage.read_terms).
+        self._ds_cache: dict[tuple, "ds.Dataset"] = {}
         # (epoch, term) -> (df, [block rows]); hot-term cache for the
         # driver latency path (the reference's cache analog, SURVEY.md
         # §4.1 "Caching/session reuse"). Cold postings reads on this box
@@ -136,8 +139,7 @@ class BM25Engine:
         # warm, and the r4 form re-opened a pyarrow dataset per bucket
         # per cold query — it nearly doubled the cold-stream p50
         # (BENCH r4 58 ms vs r3 32 ms). df values are a few bytes, so
-        # this cache is effectively free; datasets reuse _ds_cache
-        # under ("ts", epoch, bucket) keys.
+        # this cache is effectively free.
         self._df_cache: "dict[tuple[int, str], int]" = {}
         self._df_cache_max = 65536
 
@@ -210,9 +212,7 @@ class BM25Engine:
         working set is the right prefetch list."""
         hot = [t for (e, t) in self._dec_cache if e == old_epoch]
         self._ds_cache = {k: v for k, v in self._ds_cache.items()
-                          if (k[1] if k[0] in ("pos", "voc", "ts",
-                                               "vdepth")
-                              else k[0]) != old_epoch}
+                          if k[1] != old_epoch}
         for key in [k for k in self._term_cache if k[0] == old_epoch]:
             del self._term_cache[key]
         for key in [k for k in self._df_cache if k[0] == old_epoch]:
@@ -271,11 +271,11 @@ class BM25Engine:
                                   phrases, k=k, slop=slop)
 
     def _load_term_blocks(self, terms: list[str]) -> dict[str, tuple[int, list[dict]]]:
-        """Driver-side pruned postings read: only the parquet partitions
-        (bucket=<b> dirs) owning the query terms are touched, and the
-        term_id filter hits parquet row-group stats (files sorted by
-        term_id). Returned dict is keyed by the term STRING so scorers
-        sum contributions in term-ascending (oracle) order."""
+        """Driver-side pruned postings read: only the bucket=<b> dirs
+        owning the query terms are touched, and within them only the
+        row groups whose footer term_id range can hold a query term
+        (storage.read_terms). Returned dict is keyed by the term STRING
+        so scorers sum contributions in term-ascending (oracle) order."""
         n_buckets = int(self.manifest["n_buckets"])
         epoch = int(self.manifest["epoch"])
         out: dict[str, tuple[int, list[dict]]] = {}
@@ -289,20 +289,9 @@ class BM25Engine:
         if not missing:
             return self._apply_tombstones(out)
         ids = {term_id_for(t): t for t in missing}
-        buckets = sorted({bucket_of_term_id(i, n_buckets) for i in ids})
-        rows: list[dict] = []
-        for b in buckets:
-            dataset = self._ds_cache.get((epoch, b))
-            if dataset is None:
-                p = os.path.join(
-                    self.store.postings_dir_for(epoch), f"bucket={b}")
-                if not os.path.isdir(p):
-                    continue
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[(epoch, b)] = dataset
-            tbl = dataset.to_table(filter=ds.field("term_id").isin(list(ids)),
-                                   columns=_BLOCK_COLS)
-            rows.extend(tbl.to_pylist())
+        rows = read_terms(
+            dirs_for_terms(self.store.postings_dir_for(epoch), ids, n_buckets),
+            ids, _BLOCK_COLS).to_pylist()
         grouped: dict[str, list[dict]] = {}
         for row in rows:
             grouped.setdefault(ids[row["term_id"]], []).append(row)
@@ -354,9 +343,9 @@ class BM25Engine:
 
     def _term_dfs(self, terms: list[str]) -> dict[str, int]:
         """df per term from the term_stats table, through the driver df
-        cache (OOV terms cache as 0). Cache misses read via pyarrow with
-        dataset handles held in _ds_cache — O(query terms), never a
-        Spark job, and a repeat term never re-opens a dataset."""
+        cache (OOV terms cache as 0). Cache misses are one footer-pruned
+        read per touched bucket (scoring.lookup_term_dfs) — O(query
+        terms), never a Spark job."""
         epoch = int(self.manifest["epoch"])
         out: dict[str, int] = {}
         missing = []
@@ -368,28 +357,11 @@ class BM25Engine:
                 missing.append(t)
         if not missing:
             return out
-        n_buckets = int(self.manifest["n_buckets"])
         ids = {term_id_for(t): t for t in missing}
-        by_bucket: dict[int, list[int]] = {}
-        for tid in ids:
-            by_bucket.setdefault(
-                bucket_of_term_id(tid, n_buckets), []).append(tid)
-        for b, tids in by_bucket.items():
-            key = ("ts", epoch, b)
-            dataset = self._ds_cache.get(key)
-            if dataset is None:
-                p = os.path.join(
-                    self.store.term_stats_dir_for(epoch), f"bucket={b}")
-                if not os.path.isdir(p):
-                    continue
-                dataset = ds.dataset(p, format="parquet")
-                self._ds_cache[key] = dataset
-            tbl = dataset.to_table(
-                filter=ds.field("term_id").isin(tids),
-                columns=["term_id", "df"])
-            for tid, dfv in zip(tbl["term_id"].to_pylist(),
-                                tbl["df"].to_pylist()):
-                out[ids[tid]] = int(dfv)
+        found = lookup_term_dfs(self.store, list(ids),
+                                int(self.manifest["n_buckets"]), epoch)
+        for tid, dfv in found.items():
+            out[ids[tid]] = int(dfv)
         for t in missing:
             out.setdefault(t, 0)
             if len(self._df_cache) >= self._df_cache_max:
@@ -400,8 +372,8 @@ class BM25Engine:
     def _uncached_df_total(self, terms: list[str]) -> int:
         """Σdf of the terms NOT already held by a driver cache — the
         postings volume a driver-side load would actually pull. Served
-        from the df cache; a miss is one pyarrow term_stats row-group
-        read (O(query terms)), never a Spark job."""
+        from the df cache; a miss is one footer-pruned term_stats read
+        (O(query terms)), never a Spark job."""
         epoch = int(self.manifest["epoch"])
         missing = [t for t in terms
                    if (epoch, t) not in self._dec_cache

@@ -28,7 +28,8 @@ from pyspark.sql import functions as F
 
 from ..analysis import term_id_for, tokenize
 from ..codec import decode_blocks_batch
-from ..index.storage import IndexStorage, bucket_of_term_id
+from ..index.storage import (IndexStorage, bucket_of_term_id, dirs_for_terms,
+                             read_terms)
 
 DECODED_SCHEMA = "term_id long, doc_id long, tf int, dl int"
 
@@ -73,26 +74,14 @@ def analyze_queries(queries: list[dict]) -> pd.DataFrame:
 def lookup_term_dfs(store: IndexStorage, term_ids: list[int],
                     n_buckets: int, epoch: int) -> dict[int, int]:
     """Driver-side df lookup from the term_stats table (v3 blocks are
-    stats-free). One pyarrow read per touched bucket partition, filtered
-    by term_id against sorted row groups — O(query terms), never a Spark
-    job. This is why term_stats exists as its own table: a head term at
-    10^12 docs has millions of block rows; its df is ONE row here."""
-    import os
-
-    import pyarrow.dataset as pads
-
-    by_bucket: dict[int, list[int]] = {}
-    for t in term_ids:
-        by_bucket.setdefault(bucket_of_term_id(t, n_buckets), []).append(t)
-    out: dict[int, int] = {}
-    for b, ts in by_bucket.items():
-        p = os.path.join(store.term_stats_dir_for(epoch), f"bucket={b}")
-        if not os.path.isdir(p):
-            continue
-        tbl = pads.dataset(p, format="parquet").to_table(
-            filter=pads.field("term_id").isin(ts), columns=["term_id", "df"])
-        out.update(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
-    return out
+    stats-free). One footer-pruned read_terms over the touched bucket
+    partitions — O(query terms), never a Spark job. This is why
+    term_stats exists as its own table: a head term at 10^12 docs has
+    millions of block rows; its df is ONE row here."""
+    tbl = read_terms(
+        dirs_for_terms(store.term_stats_dir_for(epoch), term_ids, n_buckets),
+        term_ids, ["term_id", "df"])
+    return dict(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
 
 
 def contribution_expr(n_docs: int, avgdl: float, k1: float, b: float):
@@ -473,36 +462,25 @@ _BLK_COLS = ["term_id", "seg", "n", "first_doc_id", "last_doc_id",
 
 def _read_blocks_by_tid(pdir: str, n_buckets: int,
                         term_ids: list[int]) -> dict[int, list[dict]]:
-    """Pruned pyarrow read of the given terms' block rows, grouped by
-    term_id — the same bucket-dir + row-group pruning the driver path
-    uses (engine._load_term_blocks), shared by the direct-read WAND
-    batch plan (driver-broadcast and per-partition variants)."""
-    import os
-
-    import pyarrow.dataset as pads
-
-    by_bucket: dict[int, list[int]] = {}
-    for tid in term_ids:
-        by_bucket.setdefault(int(tid) % n_buckets, []).append(int(tid))
+    """Footer-pruned read_terms of the given terms' block rows, grouped
+    by term_id — the same bucket-dir + row-group pruning the driver
+    path uses (engine._load_term_blocks), shared by the direct-read
+    WAND batch plan (driver-broadcast and per-partition variants)."""
     out: dict[int, list[dict]] = {}
-    for bkt, tids in by_bucket.items():
-        p = os.path.join(pdir, f"bucket={bkt}")
-        if not os.path.isdir(p):
-            continue
-        tbl = pads.dataset(p, format="parquet").to_table(
-            filter=pads.field("term_id").isin(tids), columns=_BLK_COLS)
-        cols = {c: tbl[c].to_pylist() for c in _BLK_COLS}
-        for i in range(tbl.num_rows):
-            out.setdefault(cols["term_id"][i], []).append({
-                "docs_enc": cols["docs_enc"][i],
-                "tfs_enc": cols["tfs_enc"][i],
-                "dls_enc": cols["dls_enc"][i],
-                "n": cols["n"][i], "seg": cols["seg"][i],
-                "first_doc_id": cols["first_doc_id"][i],
-                "last_doc_id": cols["last_doc_id"][i],
-                "block_max_tf": cols["block_max_tf"][i],
-                "block_min_dl": cols["block_min_dl"][i],
-            })
+    tbl = read_terms(dirs_for_terms(pdir, term_ids, n_buckets), term_ids,
+                     _BLK_COLS)
+    cols = {c: tbl[c].to_pylist() for c in _BLK_COLS}
+    for i in range(tbl.num_rows):
+        out.setdefault(cols["term_id"][i], []).append({
+            "docs_enc": cols["docs_enc"][i],
+            "tfs_enc": cols["tfs_enc"][i],
+            "dls_enc": cols["dls_enc"][i],
+            "n": cols["n"][i], "seg": cols["seg"][i],
+            "first_doc_id": cols["first_doc_id"][i],
+            "last_doc_id": cols["last_doc_id"][i],
+            "block_max_tf": cols["block_max_tf"][i],
+            "block_min_dl": cols["block_min_dl"][i],
+        })
     return out
 
 

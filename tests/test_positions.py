@@ -134,3 +134,46 @@ def test_positions_absent_raises_and_merge_degrades(spark, tmp_path):
     # tests/test_sidecar_merge.py; the degradation contract (staging
     # sidecar lost -> has_positions() false, verify-path fallback) in
     # test_sidecar_merge.test_index_without_sidecars_merges_clean
+
+
+def test_sidecar_dedup_guard_sees_duplicate_behind_missing_doc(spark, tmp_path):
+    """One duplicated doc plus one missing doc keep the input row count
+    equal to the manifest's n_docs; the positions and vocab builders
+    must still keep a single copy of the duplicated doc (the guard
+    compares distinct doc_ids, not raw row counts)."""
+    from pyspark.sql import functions as F
+
+    from super_rag_spark.analysis import doc_id_for_url, term_id_for
+    from super_rag_spark.index.positions import (DECODED_POSITIONS_SCHEMA,
+                                                 build_positions,
+                                                 decode_positions_map_in_pandas)
+    from super_rag_spark.index.storage import POSITIONS_SCHEMA
+    from super_rag_spark.index.vocab import VOCAB_SCHEMA, build_vocab
+    from super_rag_spark.query.engine import BM25Engine
+
+    docs = _corpus(spark)
+    idx = str(tmp_path / "dupidx")
+    eng = BM25Engine(spark, idx).build(docs, text_is_extracted=True)
+    rows = docs.orderBy("url").collect()
+    dup, gone = rows[0], rows[-1]
+    skewed = spark.createDataFrame(
+        [tuple(r) for r in rows if r["url"] != gone["url"]] + [tuple(dup)],
+        "url string, text string")
+    assert skewed.count() == eng.manifest["n_docs"]
+    build_positions(spark, skewed, idx)
+    build_vocab(spark, skewed, idx)
+
+    # dup's text ends "pad<i> tail<j>"; pad<i> occurs in no other doc
+    pad = dup["text"].split()[-2]
+    pos = (spark.read.schema(POSITIONS_SCHEMA)
+           .parquet(eng.store.positions_dir_for(0)).drop("bucket")
+           .mapInPandas(decode_positions_map_in_pandas,
+                        schema=DECODED_POSITIONS_SCHEMA)
+           .where(F.col("term_id") == term_id_for(pad)).collect())
+    assert [(r["doc_id"], list(r["positions"])) for r in pos] == [
+        (doc_id_for_url(dup["url"]), [dup["text"].split().index(pad)])]
+    vdf = (spark.read.schema(VOCAB_SCHEMA)
+           .parquet(eng.store.vocab_dir_for(0))
+           .where((F.col("variant") == pad) & (F.col("term") == pad))
+           .select("df").collect())
+    assert [r["df"] for r in vdf] == [1]
